@@ -28,31 +28,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.vector import nearest
+
 
 def _assign(emb: DataFrame, centroids: DataFrame) -> DataFrame:
     """Add ``cluster`` and ``d2`` (squared L2 to that cluster).
 
     The codebook is collapsed to a single row (array of (c_id, centroid)
     structs, sorted for determinism) and broadcast; every vector row then
-    folds over it in place.  d2 per centroid is the identical left fold
-    over ``zip_with`` the old pair-join shape used, and the argmin
-    tie-break — smallest d2, then smallest c_id — is replayed by
-    ``array_min`` on a (d2, c_id) struct, so assignments (and the oracle
-    parity of kmeans_lloyd3 / semdedup) are bit-unchanged.
+    folds over it in place with ``functions.vector.nearest``: d2 per
+    centroid is the identical left fold the old pair-join shape used, and
+    the argmin tie-break — smallest d2, then smallest c_id — is replayed
+    by ``array_min`` on a (d2, c_id) struct, so assignments (and the
+    oracle parity of kmeans_lloyd3 / semdedup) are bit-unchanged.
     """
     cents = centroids.agg(
         F.array_sort(F.collect_list(F.struct("c_id", "centroid"))).alias("_cents")
     )
 
-    def _score(c):
-        d2 = F.aggregate(
-            F.zip_with(F.col("embedding"), c["centroid"], lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        return F.struct(d2.alias("d2"), c["c_id"].alias("c_id"))
-
-    best = F.array_min(F.transform(F.col("_cents"), _score))
+    best = nearest("embedding", "_cents", "centroid", "c_id")
     return (
         emb.crossJoin(F.broadcast(cents))
         .select("vec_id", "embedding", best.alias("_best"))

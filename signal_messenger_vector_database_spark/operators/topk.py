@@ -53,9 +53,13 @@ def l2_topk(
     vec_col: str = "embedding",
     round_digits: int = 4,
 ) -> DataFrame:
-    q = _query_vec_col(query_vec)
-    dist = F.round(l2_distance(F.col(vec_col), q), round_digits).alias("dist")
-    return df.select(id_col, dist).orderBy(F.asc("dist"), F.col(id_col)).limit(k)
+    dist = F.round(l2_distance(vec_col, "_q"), round_digits).alias("dist")
+    return (
+        df.withColumn("_q", _query_vec_col(query_vec))
+        .select(id_col, dist)
+        .orderBy(F.asc("dist"), F.col(id_col))
+        .limit(k)
+    )
 
 
 def topk_per_group(

@@ -198,14 +198,8 @@ def _rc_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=False)
 
 
-# the exact squared-L2 fold is retrieval_eval's _cl_d2 (ONE definition
-# — the shared-definition rule)
-from .retrieval_eval import _cl_d2 as _rc_d2  # noqa: E402,F401
-from .retrieval_eval import d2_unrolled as _rc_d2_unrolled  # noqa: E402
-
-
 def _ivf_pq_clustered_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.vector import cosine_similarity
+    from ..functions.vector import cosine_similarity, sq_l2
     from ..operators.ann import hier_super_count, scaled_cluster_count
     from ..operators.ranking import two_phase_topk
 
@@ -251,19 +245,15 @@ def _ivf_pq_clustered_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(cents), "cid")
         .select(
             "vec_id",
-            F.zip_with("embedding", "cv", lambda a, b: a - b).alias("rv"),
+            F.zip_with("embedding", "cv", lambda a, b: a - b).alias(
+                "embedding"
+            ),
         )
     )
-    subs = res.select(
-        "vec_id",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {_RCM - 1}), "
-                f"j -> slice(rv, j * {_RCSUB} + 1, {_RCSUB}))"
-            )
-        ).alias("sub_j", "sv"),
-    ).localCheckpoint(eager=False)
     from ..operators.ivf_index import shared_pq_parts
+    from .pq_trained import pq_sub_rows
+
+    subs = pq_sub_rows(res, _RCM, _RCSUB).localCheckpoint(eager=False)
 
     af, cb = shared_pq_parts(
         spark, subs, f"{sf_dir}/documents|rcorpus-resid|{n}",
@@ -323,14 +313,12 @@ def _ivf_pq_clustered_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         "qid int, cid long, sub_j int, qsv array<double>",
     )
-    from .pq_trained import _op_d2
-
     lut = cb.join(F.broadcast(qsub), "sub_j").select(
         "qid",
         "cid",
         "sub_j",
         "code",
-        F.floor(_op_d2("qsv", "cw") * 10000 + F.lit(0.5))
+        F.floor(sq_l2("qsv", "cw") * 10000 + F.lit(0.5))
         .cast("long")
         .alias("ld"),
     )
@@ -368,7 +356,7 @@ def _ivf_pq_clustered_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     exact = two_phase_topk(
         vecs.crossJoin(F.broadcast(queries)).select(
-            "qid", "vec_id", _rc_d2_unrolled("embedding", "qv", _RC_D).alias("d2")
+            "qid", "vec_id", sq_l2("embedding", "qv", _RC_D).alias("d2")
         ),
         "qid",
         [F.asc("d2"), F.asc("vec_id")],

@@ -57,6 +57,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.text import portable_round
+from ..functions.vector import nearest, sq_l2
 from ..io.sources import load_table
 from .registry import QuerySpec
 
@@ -96,20 +97,14 @@ def _op_query_vecs() -> list[list[float]]:
 # --- Spark side: generalized trained-PQ build ------------------------------
 
 
-def _op_sub_rows(emb: DataFrame) -> DataFrame:
+def pq_sub_rows(emb: DataFrame, m: int, d: int) -> DataFrame:
+    """Subvector table (vec_id, sub_j, sv): ``embedding`` cut into ``m``
+    consecutive ``d``-dim slices, one row per (vector, subspace)."""
     sub = F.expr(
-        f"transform(sequence(0, {_OPM - 1}), "
-        f"j -> slice(embedding, j * {_OPD} + 1, {_OPD}))"
+        f"transform(sequence(0, {m - 1}), "
+        f"j -> slice(embedding, j * {d} + 1, {d}))"
     )
     return emb.select("vec_id", F.posexplode(sub).alias("sub_j", "sv"))
-
-
-def _op_d2(sv_col: str, cw_col: str):
-    return F.aggregate(
-        F.zip_with(sv_col, cw_col, lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def _op_trained_parts(spark: SparkSession, sf_dir: str):
@@ -143,7 +138,9 @@ def _op_trained_parts(spark: SparkSession, sf_dir: str):
     # sf0.1, bit-identical — io.sources.ensure_parallelism)
     from ..io.sources import ensure_parallelism
 
-    subs = ensure_parallelism(_op_sub_rows(emb)).localCheckpoint(eager=False)
+    subs = ensure_parallelism(pq_sub_rows(emb, _OPM, _OPD)).localCheckpoint(
+        eager=False
+    )
     # routed through the r11 build-once seam: the three trained-PQ
     # queries retrain IDENTICAL codebooks (inline when
     # SMVD_IVF_CACHE_DIR is unset — byte-identical)
@@ -167,30 +164,14 @@ def pq_assign_codes(
     retraining.  Per subspace the k codewords collapse to one
     array-of-structs row, broadcast-joined on sub_j; each subvector row
     folds its argmin in place (kmeans_lloyd3 pattern — the table is
-    scanned, never shuffled).  ``array_min`` on a (d2, code) struct
-    replays min_by's tie-break (smallest d2, then smallest code)
-    bit-identically with the DuckDB twin's row_number ordering."""
+    scanned, never shuffled).  ``functions.vector.nearest`` with the
+    static ``d`` unrolls the d2 sum and replays min_by's tie-break
+    (smallest d2, then smallest code) bit-identically with the DuckDB
+    twin's row_number ordering."""
     packed = cb_df.groupBy("sub_j").agg(
         F.array_sort(F.collect_list(F.struct("code", "cw"))).alias("_cbk")
     )
-
-    def _score(e):
-        # UNROLLED d2 (small fixed d): plain getItem arithmetic, no
-        # intermediate d-element array per (row, codeword).
-        # Bit-identical to the zip_with fold: the fold computes
-        # (((0+x1)+x2)+x3)+x4 and 0+x1 == x1 exactly for the
-        # non-negative squares, so this is the same double sequence.
-        terms = [
-            (F.col("sv").getItem(i) - e["cw"].getItem(i))
-            * (F.col("sv").getItem(i) - e["cw"].getItem(i))
-            for i in range(d)
-        ]
-        d2 = terms[0]
-        for t in terms[1:]:
-            d2 = d2 + t
-        return F.struct(d2.alias("d2"), e["code"].alias("code"))
-
-    best = F.array_min(F.transform(F.col("_cbk"), _score))
+    best = nearest("sv", "_cbk", "cw", "code", d)
     out = subs.join(F.broadcast(packed), "sub_j").select(
         "vec_id", "sub_j", F.col("sv"), F.col("_cbk"), best.alias("_b")
     )
@@ -344,7 +325,7 @@ def _op_lut(trained: DataFrame, spark: SparkSession) -> DataFrame:
         "qid",
         "sub_j",
         "code",
-        F.floor(_op_d2("qv", "cw") * 10000 + F.lit(0.5)).cast("long").alias("ld"),
+        F.floor(sq_l2("qv", "cw") * 10000 + F.lit(0.5)).cast("long").alias("ld"),
     )
 
 
@@ -356,13 +337,11 @@ def _op_exact_topk(spark: SparkSession, sf_dir: str, qfull: DataFrame) -> DataFr
     same literals both engines).  ONE copy shared by the operating-point
     measurement and the nprobe operating curve."""
     from ..io.sources import ensure_parallelism
-    from .retrieval_eval import d2_unrolled
 
     emb = ensure_parallelism(load_table(spark, sf_dir, "embeddings"))
-    # unrolled d2 (r16, see d2_unrolled): the zip_with/aggregate fold is
-    # CodegenFallback and ran interpreted on every (vector, query) row;
-    # the elementwise float->double cast is hoisted into a projected
-    # column (same element values, same left-to-right sum)
+    # unrolled d2 (functions.vector.sq_l2 with the static dimension, so
+    # whole-stage codegen compiles it); sq_l2 does not cast, so the
+    # elementwise float->double cast is hoisted into a projected column
     scored = (
         emb.crossJoin(F.broadcast(qfull))
         .withColumn("_e", F.col("embedding").cast("array<double>"))
@@ -370,7 +349,7 @@ def _op_exact_topk(spark: SparkSession, sf_dir: str, qfull: DataFrame) -> DataFr
             "qid",
             "vec_id",
             portable_round(
-                d2_unrolled("_e", "qv", _OPM * _OPD), 4
+                sq_l2("_e", "qv", _OPM * _OPD), 4
             ).alias("d2"),
         )
     )
@@ -902,18 +881,19 @@ def _ivf_pq_operating_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 'all' candidate count is exactly |Q| * n (one assignment row per
     # embedding row, every cell probed) — the split above removed the
     # O(|Q| * n) rows from cand, so the row is emitted as a literal
+    nq = len(_OP_QUESTIONS)
     candn = cand.groupBy("arm").agg(
         F.count(F.lit(1)).alias("sum_cand")
     ).unionByName(
         spark.createDataFrame(
-            [("all", 5 * n)], "arm string, sum_cand long"
+            [("all", nq * n)], "arm string, sum_cand long"
         )
     )
     return (
         perq.groupBy("arm", "np")
         .agg(
             F.sum("nh").alias("nht"),
-            F.min(F.col("nh").cast("double") / F.lit(10.0)).alias(
+            F.min(F.col("nh").cast("double") / F.lit(float(_OPTOPK))).alias(
                 "recall_min"
             ),
         )
@@ -922,11 +902,13 @@ def _ivf_pq_operating_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "arm",
             F.col("np").cast("int").alias("nprobe_eff"),
             F.col("sum_cand").cast("long").alias("sum_cand"),
-            (F.col("sum_cand").cast("double") / F.lit(float(5 * n))).alias(
+            (F.col("sum_cand").cast("double") / F.lit(float(nq * n))).alias(
                 "cand_frac"
             ),
             F.col("nht").cast("long").alias("n_hits"),
-            (F.col("nht").cast("double") / F.lit(50.0)).alias("recall_mean"),
+            (
+                F.col("nht").cast("double") / F.lit(float(nq * _OPTOPK))
+            ).alias("recall_mean"),
             "recall_min",
         )
         .orderBy("nprobe_eff", "arm")
@@ -1043,7 +1025,7 @@ def _pq_encode_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    subs_all = _op_sub_rows(emb)
+    subs_all = pq_sub_rows(emb, _OPM, _OPD)
     # base subs feed the Lloyd round repeatedly: spread + checkpoint
     # (the _op_trained_parts discipline); delta subs are encoded once
     base_subs = ensure_parallelism(

@@ -50,6 +50,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import portable_round
+from ..functions.vector import nearest, sq_l2, sq_l2_py
 from ..io.sources import load_table, parquet_row_count
 from ..operators.ann import hier_super_count, ivf_assign_hier
 from .ivf_sql import HIER_ASSIGN_CTES as _HIER_ASSIGN_CTES
@@ -468,31 +469,6 @@ def _cl_vec(topic: Column, tag: Column, d: int = _CL_D) -> Column:
     )
 
 
-def _cl_d2(a: str, b: str) -> Column:
-    return F.aggregate(
-        F.zip_with(F.col(a), F.col(b), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def d2_unrolled(a: str, b: str, d: int) -> Column:
-    """``_cl_d2`` with the dimension statically known, unrolled to flat
-    arithmetic (r16, guide §4.1): higher-order functions are
-    CodegenFallback, so the zip_with/aggregate fold evaluated
-    interpreted on every scored row — measured 1.7x slower per row than
-    the codegen'd unrolled form at 64 dims.  Bit-identical: the fold
-    computes (((0.0 + t0) + t1) + ...) and this renders exactly that
-    left-associated sequence, leading 0.0D included (so a -0.0 first
-    term folds identically).  ``a``/``b`` are SQL identifiers of
-    array<double> columns of length >= d (index j is 0-based, in-bounds
-    by construction — ANSI-safe)."""
-    terms = " + ".join(
-        f"(({a}[{i}] - {b}[{i}]) * ({a}[{i}] - {b}[{i}]))" for i in range(d)
-    )
-    return F.expr(f"0.0D + {terms}")
-
-
 def _hex4_sql_spark(h_sql: str) -> str:
     """Spark-SQL rendering of ``_hex_slice_to_int(h, 1, 4)`` — the same
     instr-based digit arithmetic, value-identical BIGINT."""
@@ -522,9 +498,9 @@ def _cl_vec_expr(topic_sql: str, tag_sql: str, d: int = _CL_D) -> Column:
     return F.expr("array(" + ", ".join(dims) + ")")
 
 
-def _literal_cells_expr(rows: list[tuple[int, list[float]]]) -> Column:
-    """(cid, vector) literals as ONE parsed array-of-structs expression
-    — the in-place argmin's broadcast side.  CAST('<repr>' AS DOUBLE)
+def _literal_cells_sql(rows: list[tuple[int, list[float]]]) -> str:
+    """(cid, vector) literals as ONE array-of-structs SQL expression
+    — the in-place argmin's codebook.  CAST('<repr>' AS DOUBLE)
     round-trips Python floats exactly (Java parseDouble)."""
     parts = []
     for cid, cv in rows:
@@ -532,7 +508,7 @@ def _literal_cells_expr(rows: list[tuple[int, list[float]]]) -> Column:
         parts.append(
             f"named_struct('cid', CAST({cid} AS BIGINT), 'cv', array({arr}))"
         )
-    return F.expr("array(" + ", ".join(parts) + ")")
+    return "array(" + ", ".join(parts) + ")"
 
 
 def _cl_vec_py(topic: str, tag: str, d: int = _CL_D) -> list[float]:
@@ -609,26 +585,11 @@ def _ivf_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     # literal array-of-structs and every vector folds its argmin inside
     # the projection — no n*K cross-join row expansion and no
     # groupBy(doc_id) exchange (the old shape shuffled n pre-aggregated
-    # rows).  array_min over (d2, cid) structs replays min(struct)'s
-    # tie-break; the zip_with fold is the same left-to-right double
-    # sequence as _cl_d2, so the assignment is bit-identical and the
-    # oracle's ROW_NUMBER ORDER BY d2, cid twin is unchanged.
-    seed_lit = _literal_cells_expr(seed_rows)
-    best = F.array_min(
-        F.transform(
-            seed_lit,
-            lambda s: F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("v"), s["cv"], lambda x, y: (x - y) * (x - y)
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ).alias("d2"),
-                s["cid"].alias("cid"),
-            ),
-        )
-    )
+    # rows).  ``nearest`` (array_min over (d2, cid) structs) replays
+    # min(struct)'s tie-break over the sq_l2 fold, so the assignment is
+    # bit-identical and the oracle's ROW_NUMBER ORDER BY d2, cid twin is
+    # unchanged.
+    best = nearest("v", _literal_cells_sql(seed_rows), "cv", "cid")
     assign = vecs.select("doc_id", best["cid"].alias("cid"))
 
     # query routing: 5 x K ranked cells, one row per (arm, probed cell).
@@ -638,14 +599,8 @@ def _ivf_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the exact doubles the engines compute (the module-comment
     # exactness argument); the oracle ranks the same values with
     # ROW_NUMBER.
-    def _d2(a: list, b: list) -> float:
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc += (x - y) * (x - y)
-        return acc
-
     ranked = {
-        qid: sorted((_d2(qv, cv), cid) for cid, cv in seed_rows)
+        qid: sorted((sq_l2_py(qv, cv), cid) for cid, cv in seed_rows)
         for qid, qv in q_rows
     }
     arms = spark.createDataFrame([(a,) for a in _CL_ARMS], "np int")
@@ -674,7 +629,7 @@ def _ivf_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
             "np",
             "qid",
             "doc_id",
-            d2_unrolled("v", "qv", _CL_D).alias("d2"),
+            sq_l2("v", "qv", _CL_D).alias("d2"),
             F.concat_ws("#", "np", "qid").alias("_g"),
         )
     )
@@ -684,7 +639,7 @@ def _ivf_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     exact = two_phase_topk(
         vecs.crossJoin(F.broadcast(queries)).select(
-            "qid", "doc_id", d2_unrolled("v", "qv", _CL_D).alias("d2")
+            "qid", "doc_id", sq_l2("v", "qv", _CL_D).alias("d2")
         ),
         "qid",
         [F.asc("d2"), F.asc("doc_id")],

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.vector import sq_l2
 from ..io.sources import load_table
 from ..streaming.ingest import (
     await_drained,
@@ -468,11 +469,7 @@ def _stream_ingest_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         # sqrt would forfeit the exact dyadic arithmetic the argmin
         # tie-break relies on): every term is a dyadic rational < 2^53,
         # so d2 is exact and the (d2, cid) ordering has no FP seam.
-        d2 = F.aggregate(
-            F.zip_with("emb", "cv", lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+        d2 = sq_l2("emb", "cv")
         assigned = (
             batch_df.join(F.broadcast(cents))
             .select(

@@ -2671,14 +2671,14 @@ def _curation_chain(spark: SparkSession, sf_dir: str) -> dict:
     )
 
     import os as _os
-    import threading
 
-    prefetch: threading.Thread | None = None
+    from pyspark import InheritableThread
+
+    prefetch: InheritableThread | None = None
     if _os.environ.get("SMVD_PLAN_ONLY") != "1":
         # serialize the shared prefix first (one cache fill, no
         # duplicate-compute race between the two arms), then overlap
         docs2.count()
-        from pyspark import inheritable_thread_target
 
         def _prefetch_contaminated() -> None:
             try:
@@ -2695,9 +2695,11 @@ def _curation_chain(spark: SparkSession, sf_dir: str) -> dict:
                     "curation decontam prefetch failed (benign): %s", e
                 )
 
-        prefetch = threading.Thread(
-            target=inheritable_thread_target(spark)(_prefetch_contaminated),
-            daemon=True,
+        # InheritableThread carries the session's local properties (or
+        # Spark Connect tags) into the thread, and is a plain thread when
+        # thread pinning is off (PYSPARK_PIN_THREAD=false)
+        prefetch = InheritableThread(
+            _prefetch_contaminated, session=spark, daemon=True
         )
         prefetch.start()
 

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import portable_round
+from ..functions.vector import sq_l2
 from ..io.sources import load_table
 from .registry import QuerySpec
 
@@ -73,11 +74,7 @@ def _kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("c_label", F.col("pv.cval").alias("centroid"))
     )
     # Assignment step: squared L2 to each centroid, keep the argmin.
-    d2 = F.aggregate(
-        F.zip_with("embedding", "centroid", lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    d2 = sq_l2("embedding", "centroid")
     scored = (
         emb.join(F.broadcast(centroids))
         .select(
@@ -1058,55 +1055,31 @@ SPECS["semdedup_capped"] = QuerySpec(
 # variant has the identical plan shape.  All 8 subspace k-means problems
 # train SIMULTANEOUSLY as one relational plan — subvectors exploded to
 # (vec_id, sub_j, sv) rows, the 128 seeded codewords as one broadcast
-# dimension, assignment via min_by partial aggregation, centroid update as
-# a (sub_j, code, pos) three-key aggregate, re-assignment against the
-# trained codebooks, codes pivoted back to 8 scalar columns.  At 100 TB
-# the training state is 8*16 tiny arrays; the vector table is scanned,
-# never shuffled for a join.  The oracle replays the same single round
+# dimension, assignment in place (pq_trained.pq_assign_codes — no
+# shuffle), centroid update as a (sub_j, code, pos) three-key aggregate,
+# re-assignment against the trained codebooks, codes pivoted back to 8
+# scalar columns.  At 100 TB the training state is 8*16 tiny arrays; the
+# vector table is scanned, never shuffled for a join.  The oracle replays the same single round
 # (argmin ties by lowest code, AVG update) in chained CTEs.
 
 
-def _pq_sub_rows(emb: DataFrame) -> DataFrame:
-    sub = F.expr(
-        f"transform(sequence(0, {_PQ_M - 1}), "
-        f"j -> slice(embedding, j * {_PQ_D} + 1, {_PQ_D}))"
-    )
-    return emb.select("vec_id", F.posexplode(sub).alias("sub_j", "sv"))
-
-
-def _pq_d2(sv_col: str, cw_col: str):
-    return F.aggregate(
-        F.zip_with(sv_col, cw_col, lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _pq_trained_parts(spark: SparkSession, sf_dir: str):
-    """(final assignment a2, trained codebooks) — ONE build shared by
-    pq_encode_trained and pq_recall_trained so the training recipe
-    cannot drift between the encoder and its recall measurement."""
+    """(final assignment a2 (vec_id, sub_j, code), trained codebooks
+    (sub_j, code, cw)) — ONE build shared by pq_encode_trained and
+    pq_recall_trained so the training recipe cannot drift between the
+    encoder and its recall measurement."""
+    from .pq_trained import pq_assign_codes, pq_sub_rows
+
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    subs = _pq_sub_rows(emb).localCheckpoint(eager=False)
+    subs = pq_sub_rows(emb, _PQ_M, _PQ_D).localCheckpoint(eager=False)
     books = _pq_codebooks()
     cb0 = spark.createDataFrame(
         [(j, k, books[j][k]) for j in range(_PQ_M) for k in range(_PQ_K)],
         "sub_j int, code int, cw array<double>",
     )
-
-    def assign(cb: DataFrame) -> DataFrame:
-        scored = subs.join(F.broadcast(cb), "sub_j").select(
-            "vec_id", "sub_j", "sv", "code", _pq_d2("sv", "cw").alias("d2")
-        )
-        return scored.groupBy("vec_id", "sub_j").agg(
-            F.min_by(F.struct("code", "sv"), F.struct("d2", "code")).alias("_w")
-        ).select(
-            "vec_id", "sub_j", F.col("_w.code").alias("code"), F.col("_w.sv").alias("sv")
-        )
-
-    a1 = assign(cb0)
+    a1 = pq_assign_codes(subs, cb0, _PQ_D, keep_sv=True)
     trained = (
         a1.select("sub_j", "code", F.posexplode("sv").alias("pos", "val"))
         .groupBy("sub_j", "code", "pos")
@@ -1115,7 +1088,7 @@ def _pq_trained_parts(spark: SparkSession, sf_dir: str):
         .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pv"))
         .select("sub_j", "code", F.col("pv.m").alias("cw"))
     )
-    return assign(trained), trained
+    return pq_assign_codes(subs, trained, _PQ_D), trained
 
 
 def _pq_encode_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1131,24 +1104,6 @@ def _pq_encode_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pq_encode_trained_sql() -> str:
-    books = _pq_codebooks()
-    cb_vals = ", ".join(
-        f"({j}, {k}, [" + ", ".join(f"CAST({c} AS DOUBLE)" for c in books[j][k]) + "])"
-        for j in range(_PQ_M)
-        for k in range(_PQ_K)
-    )
-    d2 = (
-        "list_sum(list_transform(range(1, {n}), "
-        "i -> (s.sv[i] - c.cw[i]) * (s.sv[i] - c.cw[i])))"
-    ).format(n=_PQ_D + 1)
-    assign = """
-{out} AS (
-  SELECT vec_id, sub_j, sv, code FROM (
-    SELECT s.vec_id, s.sub_j, s.sv, c.code, {d2} AS d2,
-           row_number() OVER (PARTITION BY s.vec_id, s.sub_j ORDER BY {d2}, c.code) AS rn
-    FROM subs s JOIN {cb} c ON s.sub_j = c.sub_j
-  ) WHERE rn = 1
-)"""
     cols = ",\n       ".join(
         f"CAST(MAX(CASE WHEN sub_j = {j} THEN code END) AS INTEGER) AS c{j}"
         for j in range(_PQ_M)
@@ -2480,23 +2435,7 @@ def _pq_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(100)
         .select("vec_id")
     )
-    emb = load_table(spark, sf_dir, "embeddings")
-    qv = F.array(*[F.lit(x) for x in _pq_query_vec()]).cast("array<double>")
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("embedding").cast("array<double>"),
-            qv,
-            lambda a, b: (a - b) * (a - b),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    exact = (
-        emb.select("vec_id", portable_round(d2, 4).alias("d2"))
-        .orderBy("d2", "vec_id")
-        .limit(10)
-        .select("vec_id")
-    )
+    exact = _exact_l2_top10(spark, sf_dir)
     hits = approx.join(exact, "vec_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_hits")
     )
@@ -2575,19 +2514,12 @@ SPECS["pq_recall_at_k"] = QuerySpec(
 def _exact_l2_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact squared-L2 top-10 for the PQ literal query vector — shared
     ground truth for both PQ recall measurements."""
-    emb = load_table(spark, sf_dir, "embeddings")
     qv = F.array(*[F.lit(x) for x in _pq_query_vec()]).cast("array<double>")
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("embedding").cast("array<double>"),
-            qv,
-            lambda a, b: (a - b) * (a - b),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("e"), qv.alias("qv")
     )
     return (
-        emb.select("vec_id", portable_round(d2, 4).alias("d2"))
+        emb.select("vec_id", portable_round(sq_l2("e", "qv"), 4).alias("d2"))
         .orderBy("d2", "vec_id")
         .limit(10)
         .select("vec_id")
@@ -2617,7 +2549,7 @@ def _pq_recall_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     lut = trained.join(F.broadcast(qdf), "sub_j").select(
         "sub_j",
         "code",
-        F.floor(_pq_d2("qv", "cw") * 10000 + F.lit(0.5))
+        F.floor(sq_l2("qv", "cw") * 10000 + F.lit(0.5))
         .cast("long")
         .alias("ld_q"),
     )

@@ -581,3 +581,43 @@ def test_curation_attrition_accounts_every_removal(spark):
     assert next(
         r.n_docs for r in att if r.reason == "exact_dup"
     ) > 0 and next(r.n_docs for r in att if r.reason == "near_dup") > 0
+
+
+_UNPINNED_CURATION = """
+import sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession
+from signal_messenger_vector_database_spark.plans.catalog import all_specs
+
+spark = (
+    SparkSession.builder.master("local[2]")
+    .config("spark.sql.shuffle.partitions", "2")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+)
+spark.sparkContext.setLogLevel("ERROR")
+rows = all_specs()["curation_pipeline"].fn(spark, {sf!r}).collect()
+print("ROWS", len(rows))
+spark.stop()
+"""
+
+
+def test_curation_pipeline_runs_with_thread_pinning_off():
+    """The curation decontam prefetch thread must start under a driver
+    that turned py4j thread pinning off (PYSPARK_PIN_THREAD=false),
+    where ``inheritable_thread_target(session)`` is not a decorator."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYSPARK_PIN_THREAD="false", PYTHONPATH=repo)
+    proc = subprocess.run(
+        [sys.executable, "-c", _UNPINNED_CURATION.format(repo=repo, sf=SF)],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "ROWS " in proc.stdout

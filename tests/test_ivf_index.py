@@ -99,13 +99,14 @@ def test_cached_pq_parts_bit_identical_to_inline(spark, tmp_path, monkeypatch):
     )
     from signal_messenger_vector_database_spark.plans.pq_trained import (
         _OPD,
-        _op_sub_rows,
+        _OPM,
+        pq_sub_rows,
     )
 
     emb = load_table(spark, SF, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    subs = _op_sub_rows(emb).localCheckpoint(eager=False)
+    subs = pq_sub_rows(emb, _OPM, _OPD).localCheckpoint(eager=False)
 
     monkeypatch.delenv("SMVD_IVF_CACHE_DIR", raising=False)
     af_i, cb_i = shared_pq_parts(spark, subs, "t", _OPD, 16, 1)
@@ -355,7 +356,7 @@ def test_session_memo_pq_parts(spark, monkeypatch):
     from signal_messenger_vector_database_spark.plans.pq_trained import (
         _OPD,
         _OPM,
-        _op_sub_rows,
+        pq_sub_rows,
     )
 
     monkeypatch.delenv("SMVD_IVF_CACHE_DIR", raising=False)
@@ -363,7 +364,7 @@ def test_session_memo_pq_parts(spark, monkeypatch):
     emb = load_table(spark, SF, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    subs = _op_sub_rows(emb).localCheckpoint(eager=False)
+    subs = pq_sub_rows(emb, _OPM, _OPD).localCheckpoint(eager=False)
     af1, cb1 = shared_pq_parts(spark, subs, "memo-pq", _OPD, 16, 1)
     af2, cb2 = shared_pq_parts(spark, subs, "memo-pq", _OPD, 16, 1)
     assert af2 is af1 and cb2 is cb1
@@ -914,7 +915,8 @@ def test_pq_encode_delta_tiers_bit_identical(spark, tmp_path, monkeypatch):
     )
     from signal_messenger_vector_database_spark.plans.pq_trained import (
         _OPD,
-        _op_sub_rows,
+        _OPM,
+        pq_sub_rows,
     )
 
     emb = load_table(spark, SF, "embeddings").select(
@@ -922,7 +924,7 @@ def test_pq_encode_delta_tiers_bit_identical(spark, tmp_path, monkeypatch):
     )
     n = emb.count()
     cut = n - max(50, n // 10)
-    subs_all = _op_sub_rows(emb)
+    subs_all = pq_sub_rows(emb, _OPM, _OPD)
     base_subs = subs_all.filter(F.col("vec_id") < cut).localCheckpoint(
         eager=False
     )

@@ -4,38 +4,92 @@ to the form it replaced (the round's result-invariance rule)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMALL
 
 
-def test_d2_unrolled_matches_hof_fold(spark):
-    """d2_unrolled (flat codegen arithmetic) == the zip_with/aggregate
-    fold it replaced, bit-for-bit, on the real 64-dim embedding table
-    crossed with a fixture-derived query vector."""
+@pytest.mark.parametrize("unrolled", [False, True], ids=["fold", "unrolled"])
+def test_d2_unrolled_matches_hof_fold(spark, unrolled):
+    """sq_l2 — the rendered fold and its flat codegen'd unrolling — ==
+    the Python-API zip_with/aggregate fold it replaced, bit-for-bit, on
+    the real 64-dim embedding table crossed with a fixture-derived query
+    vector."""
+    from signal_messenger_vector_database_spark.functions.vector import sq_l2
     from signal_messenger_vector_database_spark.io.sources import load_table
-    from signal_messenger_vector_database_spark.plans.retrieval_eval import (
-        _cl_d2,
-        d2_unrolled,
-    )
 
     emb = load_table(spark, SF_SMALL, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("a")
     )
-    # second operand: the same table reversed per-row (deterministic,
-    # exercises negative diffs and -0.0 terms)
-    df = emb.withColumn("b", F.reverse(F.col("a")))
+    # second operand: the same table reversed per-row and divided by 3
+    # (deterministic, exercises negative diffs and -0.0 terms; the
+    # non-dyadic values make the sum inexact, so a different summation
+    # order shows up as a different double)
+    df = emb.withColumn("b", F.expr("transform(reverse(a), x -> x / 3.0D)"))
     d = df.select(F.size("a").alias("n")).agg(F.min("n"), F.max("n")).first()
     assert d[0] == d[1], "fixture embeddings must be fixed-width"
     dim = d[0]
-    cmp = df.select(
-        _cl_d2("a", "b").alias("hof"),
-        d2_unrolled("a", "b", dim).alias("unrolled"),
+    reference = F.aggregate(
+        F.zip_with("a", "b", lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
     )
-    bad = cmp.filter(
-        ~(F.col("hof").eqNullSafe(F.col("unrolled")))
-    ).count()
+    cmp = df.select(
+        reference.alias("ref"),
+        sq_l2("a", "b", dim if unrolled else None).alias("got"),
+    )
+    bad = cmp.filter(~(F.col("ref").eqNullSafe(F.col("got")))).count()
     assert bad == 0
+
+
+def test_nearest_matches_min_by_first_cut(spark):
+    """pq_assign_codes (``nearest``, unrolled d2, array_min over
+    (d2, code)) assigns the same (vec_id, sub_j, code, sv) rows as the
+    shuffle-based groupBy(vec_id, sub_j).min_by shape it replaced in
+    ``vectorops._pq_trained_parts``, on the 8x8 subvectors against the
+    literal codebooks."""
+    from signal_messenger_vector_database_spark.io.sources import load_table
+    from signal_messenger_vector_database_spark.plans.pq_trained import (
+        pq_assign_codes,
+        pq_sub_rows,
+    )
+    from signal_messenger_vector_database_spark.plans.vectorops import (
+        _PQ_D,
+        _PQ_K,
+        _PQ_M,
+        _pq_codebooks,
+    )
+
+    emb = load_table(spark, SF_SMALL, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    )
+    subs = pq_sub_rows(emb, _PQ_M, _PQ_D).localCheckpoint()
+    books = _pq_codebooks()
+    cb = spark.createDataFrame(
+        [(j, k, books[j][k]) for j in range(_PQ_M) for k in range(_PQ_K)],
+        "sub_j int, code int, cw array<double>",
+    )
+    d2 = F.aggregate(
+        F.zip_with("sv", "cw", lambda a, b: (a - b) * (a - b)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    reference = (
+        subs.join(F.broadcast(cb), "sub_j")
+        .select("vec_id", "sub_j", "sv", "code", d2.alias("d2"))
+        .groupBy("vec_id", "sub_j")
+        .agg(F.min_by(F.struct("code", "sv"), F.struct("d2", "code")).alias("_w"))
+        .select("vec_id", "sub_j", "_w.code", "_w.sv")
+    )
+    got = pq_assign_codes(subs, cb, _PQ_D, keep_sv=True).select(
+        "vec_id", "sub_j", "code", "sv"
+    )
+    n = reference.count()
+    assert n == emb.count() * _PQ_M
+    assert got.count() == n
+    assert got.exceptAll(reference).count() == 0
+    assert reference.exceptAll(got).count() == 0
 
 
 def test_dup_set_minmax_matches_count_distinct(spark):

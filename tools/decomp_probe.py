@@ -25,6 +25,8 @@ def main() -> None:
         3,
     )
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    # codegen warm-up runs on the smallest scale next to sf_dir
+    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
 
     from signal_messenger_vector_database_spark.plans.catalog import all_specs
     from signal_messenger_vector_database_spark.session import get_spark
@@ -38,7 +40,7 @@ def main() -> None:
             print(f"{name}: NOT IN CATALOG", flush=True)
             continue
         # codegen warmup (bench methodology)
-        specs[name].fn(spark, "/root/testdata/sf0.001").write.format(
+        specs[name].fn(spark, warm_dir).write.format(
             "noop"
         ).mode("overwrite").save()
         for i in range(runs):

@@ -35,6 +35,8 @@ def main() -> None:
     )
     eventlog = "--eventlog" in flags
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    # codegen warm-up runs on the smallest scale next to sf_dir
+    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
 
     evdir = None
     if eventlog:
@@ -83,7 +85,7 @@ def main() -> None:
             print(f"{name}: NOT IN CATALOG", flush=True)
             continue
         # codegen warmup at the smallest sf (bench methodology)
-        specs[name].fn(spark, "/root/testdata/sf0.001").write.format(
+        specs[name].fn(spark, warm_dir).write.format(
             "noop"
         ).mode("overwrite").save()
         if explain:
