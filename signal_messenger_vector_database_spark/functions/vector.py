@@ -38,6 +38,24 @@ Both take SQL expression strings, so lambda variables (``c.cw``) work as
 operands, and both render ONE ``F.expr``: a d-term unrolled sum composed
 out of Column ops costs several py4j round trips per term at every plan
 build; the rendered string is one call.
+
+Dot product, norm and cosine have SQL renderers too — ``dot``, ``norm``
+and ``cosine`` return SQL text for the caller to compose into one
+``F.expr``, and ``vec_literal`` renders a driver-side query vector as
+one ``array(<repr>D, ...)`` literal instead of d ``F.lit`` calls:
+
+* **Fold order.**  ``dot(a, b)`` is the left fold
+  ``aggregate(zip_with(a, b, (x, y) -> x * y), 0.0D, (acc, t) -> acc + t)``
+  — the very expression tree ``dot_product`` builds, so the two are
+  bit-identical; ``norm(a)`` is ``sqrt(dot(a, a))`` and ``cosine(a, b)``
+  is ``dot(a, b) / (norm(a) * norm(b))``, the trees of ``l2_norm`` and
+  ``cosine_similarity``.  ``cosine`` takes the norms as optional
+  operands so a caller that hoisted them (a projected column, a state
+  field) divides by the same doubles.
+* **No casts.**  Like ``sq_l2``, the renderers do not cast; callers
+  pass array<double>.  ``dot_product``/``l2_norm``/``cosine_similarity``
+  (Column operands, casting) stay for the callers that pass Columns or
+  Python lambdas.
 """
 
 from __future__ import annotations
@@ -63,6 +81,42 @@ def dot_product(a: Column | str, b: Column | str) -> Column:
 
 def l2_norm(a: Column | str) -> Column:
     return F.sqrt(dot_product(a, a))
+
+
+def dot(a: str, b: str) -> str:
+    """SQL text of ``dot_product`` over two array<double> SQL expressions:
+    the same left fold, bit-identical (module docstring)."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, "
+        "(acc, t) -> acc + t)"
+    )
+
+
+def norm(a: str) -> str:
+    """SQL text of ``l2_norm``: ``sqrt(dot(a, a))``."""
+    return f"sqrt({dot(a, a)})"
+
+
+def cosine(a: str, b: str, na: str | None = None, nb: str | None = None) -> str:
+    """SQL text of ``cosine_similarity``: ``dot(a, b) / (|a| * |b|)``;
+    ``na``/``nb`` name already-computed norms (else rendered in place)."""
+    return f"({dot(a, b)} / ({na or norm(a)} * {nb or norm(b)}))"
+
+
+def _double_sql(x: float) -> str:
+    # repr is the shortest string that round-trips; Spark parses a
+    # ``<digits>D`` literal with Double.parseDouble, so the value is the
+    # same double F.lit(x) carries.  Non-finite values have no literal.
+    if x != x:
+        return "CAST('NaN' AS DOUBLE)"
+    if x in (float("inf"), float("-inf")):
+        return f"CAST('{'-' if x < 0 else ''}Infinity' AS DOUBLE)"
+    return f"{x!r}D"
+
+
+def vec_literal(values) -> str:
+    """A driver-side vector as ONE array<double> SQL literal."""
+    return "array(" + ", ".join(_double_sql(float(x)) for x in values) + ")"
 
 
 def _sq_l2_sql(a: str, b: str, d: int | None) -> str:

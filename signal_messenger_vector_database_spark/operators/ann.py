@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vector import cosine_similarity, dot_product
+from ..functions.vector import cosine, cosine_similarity, dot_product, norm
 from .embed import HashEmbedder
 
 
@@ -288,46 +288,114 @@ def ivf_assign(
     )
 
 
-def centroid_super_map(centroids: DataFrame, n_super: int):
+_MEMBER_TYPE = "array<struct<cid:bigint,cv:array<double>,_nc:double>>"
+
+
+def _centroid_rows(centroids: DataFrame) -> DataFrame:
+    """(cid, cv, _nc): the centroids as array<double> with their norms."""
+    return centroids.select(
+        "cid", F.col("cv").cast("array<double>").alias("cv")
+    ).select("cid", "cv", F.expr(norm("cv")).alias("_nc"))
+
+
+def _codebook(centroids: DataFrame) -> DataFrame:
+    """ONE collect_list aggregate over the (tiny) centroid table: a
+    single row ``_book`` holding every (cid, cv, _nc), sorted by cid."""
+    return _centroid_rows(centroids).agg(
+        F.array_sort(F.collect_list(F.struct("cid", "cv", "_nc"))).alias("_book")
+    )
+
+
+def _vector_rows(df: DataFrame, keys: list[str], vec_col: str) -> DataFrame:
+    """(keys..., _v, _nv): the vectors as array<double> with their norms
+    — the operands every rendered cosine below reads."""
+    return df.select(
+        *keys, F.col(vec_col).cast("array<double>").alias("_v")
+    ).select(*keys, "_v", F.expr(norm("_v")).alias("_nv"))
+
+
+def _super_sims(v: str, nv: str) -> str:
+    """SQL text: ``(negsim, sid)`` for each super in the row's ``_sups``
+    — the level-1 comparator (max cosine, then smallest sid)."""
+    return (
+        f"transform(_sups, s -> struct(-{cosine(v, 's.cv', nv, 's._nc')} "
+        "AS negsim, s.cid AS sid))"
+    )
+
+
+def _top_supers(nprobe: int) -> str:
+    """SQL text: the row's ``nprobe`` nearest supers, nearest first —
+    the ONE probe list the build path and the router both route with."""
+    return f"slice(array_sort({_super_sims('_v', '_nv')}), 1, {nprobe})"
+
+
+def _cell_sims(members: str) -> str:
+    """SQL text: ``(negsim, cid)`` for each centroid in ``members`` — the
+    level-2 comparator (max cosine, then smallest cid)."""
+    return (
+        f"transform({members}, c -> struct("
+        f"-{cosine('_v', 'c.cv', '_nv', 'c._nc')} AS negsim, c.cid AS cid))"
+    )
+
+
+def _candidates(nprobe: int) -> str:
+    """SQL text: the (negsim, cid) structs of every centroid in the row's
+    ``nprobe`` routed super-cells, read from the ``_cmap`` state."""
+    return (
+        f"flatten(transform({_top_supers(nprobe)}, "
+        f"p -> {_cell_sims('element_at(_cmap, p.sid)')}))"
+    )
+
+
+def centroid_super_map(centroids: DataFrame, n_super: int) -> DataFrame:
     """The two-level quantizer's level-1 state, extracted so the build
     path (``ivf_assign_hier``) and the query-time router
     (``route_query_cells``) share ONE definition (the shared-definition
     rule — the SQL twin is the ``s``/``c2s`` CTE pair in
-    plans/ivf_sql.py::hier_assign_ctes).  Returns ``(supers, c2s)``:
-    supers = (sid, sv, _ns) — the first n_super centroids; c2s =
-    (cid, sid, cv, _nc) — each coarse centroid routed to its nearest
-    super (max cosine, sid tie-break).  Both frames are k-row tiny and
-    always broadcast by their consumers."""
-    from ..functions.vector import l2_norm
+    plans/ivf_sql.py::hier_assign_ctes).
 
-    supers = centroids.filter(F.col("cid") < n_super).select(
-        F.col("cid").alias("sid"), F.col("cv").alias("sv"),
-        l2_norm("cv").alias("_ns"),
+    Returns ONE row built by ONE aggregate: a collect_list over the
+    k-row centroid table (``_codebook``) followed by a projection on
+    that row — no shuffle per centroid, no second aggregate, no window.
+    Its two fields:
+
+    * ``_sups`` — the supers, the first n_super centroids (cid <
+      n_super) as (cid, cv, _nc) structs sorted by cid;
+    * ``_cmap`` — map sid -> that super's member centroids (cid, cv,
+      _nc), sorted by cid.  Each centroid joins its nearest super (max
+      cosine, sid tie-break), computed in place on the row by
+      ``array_min`` over the ``_super_sims`` structs — the comparator the
+      vectors route with.  Every super is a key (with an empty array
+      when no centroid joins it), so a lookup by a routed sid never
+      misses.
+
+    The row is k-entry tiny and always broadcast by its consumers."""
+    book = _codebook(centroids).select(
+        "_book", F.expr(f"filter(_book, c -> c.cid < {n_super})").alias("_sups")
     )
-    # level-1 routing for the centroids themselves (k * n_super, tiny)
-    cent = centroids.select("cid", "cv", l2_norm("cv").alias("_nc"))
-    c2s = (
-        cent.crossJoin(F.broadcast(supers))
-        .select(
-            "cid",
-            "cv",
-            "_nc",
-            "sid",
-            (
-                dot_product("cv", "sv") / (F.col("_nc") * F.col("_ns"))
-            ).alias("csim"),
-        )
-        .groupBy("cid")
-        .agg(
-            F.min_by(
-                F.struct("sid", "cv", "_nc"),
-                F.struct((-F.col("csim")).alias("negsim"), F.col("sid")),
-            ).alias("s")
-        )
-        .select("cid", F.col("s.sid").alias("sid"), F.col("s.cv").alias("cv"),
-                F.col("s._nc").alias("_nc"))
+    c2s = book.select(
+        "_sups",
+        F.expr(
+            "transform(_book, c -> struct(c.cid AS cid, c.cv AS cv, "
+            f"c._nc AS _nc, array_min({_super_sims('c.cv', 'c._nc')}).sid "
+            "AS sid))"
+        ).alias("_c2s"),
     )
-    return supers, c2s
+    # group in ONE pass over _c2s (it is the folded array, never captured
+    # by a per-super lambda — Catalyst inlines the projection below, and
+    # a captured _c2s would be recomputed once per super); each member
+    # array starts as an empty array of the (cid, cv, _nc) struct type
+    # and is appended to in cid order
+    return c2s.select(
+        "_sups",
+        F.expr(
+            "aggregate(_c2s, map_from_arrays(transform(_sups, s -> s.cid), "
+            "transform(_sups, s -> filter(array(s), x -> false))), "
+            "(m, c) -> transform_values(m, (sid, ms) -> IF(sid = c.sid, "
+            "concat(ms, array(struct(c.cid AS cid, c.cv AS cv, c._nc AS _nc))), "
+            "ms)))"
+        ).alias("_cmap"),
+    )
 
 
 def route_query_cells(
@@ -343,8 +411,8 @@ def route_query_cells(
     """Query-time multi-cell routing: the ``n_cells`` nearest coarse
     cells for ONE query vector, replaying EXACTLY the two-level rule
     ``ivf_assign_hier`` applies at build time (same shared
-    ``centroid_super_map`` level-1 state, same nprobe super routing,
-    same cosine arithmetic and tie-breaks) but keeping the top
+    ``centroid_super_map`` level-1 state, same ``_top_supers`` nprobe
+    routing, same cosine arithmetic and tie-breaks) but keeping the top
     ``n_cells`` cells instead of the argmax.
 
     Why serving needs this when the stored assignment doesn't: the
@@ -355,61 +423,40 @@ def route_query_cells(
     re-ranks over the union of its n_cells nearest cells.  Cost is
     O(n_cells x cell size) candidates against the same stored index;
     the routing itself is driver-free arithmetic over the k-row
-    centroid table (all frames broadcast, no corpus scan).
+    centroid table (no corpus scan).
+
+    The routing is a projection over ONE broadcast state row: each
+    query row cross-joins the level-1 state, picks its supers, flattens
+    their ``_cmap`` members, sorts the (negsim, cid) structs and
+    ``posexplode``s the first ``n_cells`` — no window, no hash shuffle,
+    and the only aggregate is the state's one (a batch adds only the
+    sort that gives its documented row order).
 
     ``q`` is a (vec_col) frame — 1 row, or a BATCH of query vectors
     when ``id_col`` names their key (routing is then per-query: the
-    late-interaction / eval-sweep shape).  Returns (id_col?, cid) —
-    plus ``cell_rank`` (1 = nearest) when ``with_rank`` is set, so an
-    operating-curve consumer routes ONCE at its widest arm and slices
-    ``cell_rank <= arm`` per arm.  Rows come back ordered by
-    (id_col?, cell_rank); broadcast the result into the shortlist
-    join.  The SQL twin is the qs/qcells CTE pair over the shared hier
-    chain (the ``topk_ivf_filtered`` / ``filtered_recall_curve``
-    oracles)."""
-    from pyspark.sql import Window
-
-    from ..functions.vector import l2_norm
-
-    supers, c2s = centroid_super_map(centroids, n_super)
+    late-interaction / eval-sweep shape; the same projection per row).
+    Returns (id_col?, cid) — plus ``cell_rank`` (1 = nearest) when
+    ``with_rank`` is set, so an operating-curve consumer routes ONCE at
+    its widest arm and slices ``cell_rank <= arm`` per arm.  Rows come
+    back ordered by (id_col?, cell_rank); broadcast the result into the
+    shortlist join.  The SQL twin is the qs/qcells CTE pair over the
+    shared hier chain (the ``topk_ivf_filtered`` /
+    ``filtered_recall_curve`` oracles)."""
     keys = [id_col] if id_col else []
-    qv = q.select(
-        *keys, F.col(vec_col).alias("_qv"), l2_norm(vec_col).alias("_nq")
-    )
-    # per-query windows over tiny joined frames (|Q| x n_super, then
-    # |Q| x nprobe x cells-per-super): row_number replays the same
-    # (sim DESC, id) comparator the orderBy/limit form had, but keyed
-    w_s = Window.partitionBy(*keys).orderBy(F.desc("ssim"), "sid")
-    qsids = (
-        qv.crossJoin(F.broadcast(supers))
+    ranked = f"slice(array_sort({_candidates(nprobe)}), 1, {n_cells})"
+    cells = (
+        _vector_rows(q, keys, vec_col)
+        .crossJoin(F.broadcast(centroid_super_map(centroids, n_super)))
+        .select(*keys, F.posexplode(F.expr(ranked)).alias("_pos", "_c"))
         .select(
-            *keys,
-            "_qv",
-            "_nq",
-            "sid",
-            (dot_product("_qv", "sv") / (F.col("_nq") * F.col("_ns"))).alias(
-                "ssim"
-            ),
+            *keys, F.col("_c.cid").alias("cid"), (F.col("_pos") + 1).alias("cell_rank")
         )
-        .withColumn("_srk", F.row_number().over(w_s))
-        .filter(F.col("_srk") <= nprobe)
-        .select(*keys, "_qv", "_nq", "sid")
     )
-    w_c = Window.partitionBy(*keys).orderBy(F.desc("csim"), "cid")
-    ranked = (
-        qsids.join(F.broadcast(c2s), "sid")
-        .select(
-            *keys,
-            "cid",
-            (dot_product("_qv", "cv") / (F.col("_nq") * F.col("_nc"))).alias(
-                "csim"
-            ),
-        )
-        .withColumn("cell_rank", F.row_number().over(w_c))
-        .filter(F.col("cell_rank") <= n_cells)
-    )
-    out = [*keys, "cid"] + (["cell_rank"] if with_rank else [])
-    return ranked.orderBy(*keys, "cell_rank").select(*out)
+    if keys:
+        cells = cells.orderBy(*keys, "cell_rank")
+    # one query row: posexplode already emits its cells nearest first,
+    # and no sort or coalesce serializes the query scan's partitions
+    return cells.select(*keys, "cid", *(["cell_rank"] if with_rank else []))
 
 
 def ivf_assign_hier(
@@ -441,8 +488,9 @@ def ivf_assign_hier(
     instead of asserting it.
 
     Supers are the first n_super centroids (cid < n_super) — the seeded-
-    centroid idiom one level up.  Both argmins are min_by aggregates
-    (partial-aggregated; no window), both centroid tables broadcast.
+    centroid idiom one level up.  Both argmins are computed in place
+    (array_min over (negsim, id) structs; no window, no min_by shuffle),
+    and the level-1 state is broadcast.
 
     nprobe=3 is the measured default: on the fixture's HashEmbedder
     vectors — near-isotropic on the sphere, the WORST case for
@@ -457,64 +505,48 @@ def ivf_assign_hier(
 
     State representation (ADVICE r9): the default packs the whole
     codebook (all k centroids + the sid->members map) into ONE
-    broadcast row — built by a global collect_list aggregate, i.e. a
-    single-task reduce, and bounded by Spark's 2 GB single-row limit.
-    Under the scaled-k rule that row grows linearly with the corpus
-    (~600 B/centroid: ~2.5 MB at k=4096, ~600 MB at k=10^6), so when
-    ``n_centroids`` (pass it when known — every catalog consumer does)
-    exceeds ``shard_threshold`` the SHARDED formulation is used
-    instead: one member row per super-cell, built by a PARALLEL
-    groupBy(sid) aggregate, broadcast-joined once per probe rank on
-    the routed sid — rows of ~sqrt(k)*600 B each, no global reduce,
-    no monolithic row, and still ZERO data-row exchanges (each vector
-    routes via the tiny packed supers row, then argmins in place over
-    its nprobe joined member arrays).  Comparators are identical —
-    array_min over the union of the same (negsim, cid) structs — so
-    both representations return bit-identical assignments (pinned by
+    broadcast row — ``centroid_super_map``, built by a global
+    collect_list aggregate, i.e. a single-task reduce, and bounded by
+    Spark's 2 GB single-row limit.  Under the scaled-k rule that row
+    grows linearly with the corpus (~600 B/centroid: ~2.5 MB at
+    k=4096, ~600 MB at k=10^6), so when ``n_centroids`` (pass it when
+    known — every catalog consumer does) exceeds ``shard_threshold``
+    the SHARDED formulation is used instead: one member row per
+    super-cell, built by a PARALLEL groupBy(sid) aggregate (each
+    centroid's super computed in place against the broadcast ``_sups``
+    row, with the same comparator), broadcast-joined once per probe
+    rank on the routed sid — rows of ~sqrt(k)*600 B each, no global
+    reduce of the codebook, no monolithic row, and still ZERO data-row
+    exchanges (each vector routes via the tiny ``_sups`` row, then
+    argmins in place over its nprobe joined member arrays).
+    Comparators are identical — array_min over the union of the same
+    (negsim, cid) structs — so both representations return
+    bit-identical assignments (pinned by
     test_ivf_hier_sharded_matches_packed)."""
-    from ..functions.vector import l2_norm
-
-    supers, c2s = centroid_super_map(centroids, n_super)
-    ev = emb.select(
-        F.col(id_col), F.col(vec_col), l2_norm(vec_col).alias("_nv")
-    )
-
-    def _ssim(s):
-        return dot_product(F.col(vec_col), s["sv"]) / (F.col("_nv") * s["_ns"])
-
-    def _csim(c):
-        return dot_product(F.col(vec_col), c["cv"]) / (F.col("_nv") * c["_nc"])
-
-    _member_type = "array<struct<cid:bigint,cv:array<double>,_nc:double>>"
-    sups_packed = supers.agg(
-        F.array_sort(F.collect_list(F.struct("sid", "sv", "_ns"))).alias(
-            "_sups"
-        )
-    )
-    top = F.slice(
-        F.array_sort(
-            F.transform(
-                F.col("_sups"),
-                lambda s: F.struct((-_ssim(s)).alias("negsim"), s["sid"].alias("sid")),
-            )
-        ),
-        1,
-        nprobe,
-    )
+    ev = _vector_rows(emb, [id_col], vec_col)
 
     if n_centroids is not None and n_centroids > shard_threshold:
-        # SHARDED state (see docstring): per-sid member rows from a
-        # parallel aggregate; one broadcast hash join per probe rank on
-        # the routed sid.  try_element_at: when n_super < nprobe the
-        # top list is short and the missing ranks LEFT-join to null ->
+        # SHARDED state (see docstring): the supers row from the same
+        # codebook builder, per-sid member rows from a parallel
+        # aggregate; one broadcast hash join per probe rank on the
+        # routed sid.  try_element_at: when n_super < nprobe the top
+        # list is short and the missing ranks LEFT-join to null ->
         # empty candidate arrays (ANSI-safe).
-        members = c2s.groupBy("sid").agg(
-            F.array_sort(F.collect_list(F.struct("cid", "cv", "_nc"))).alias(
-                "_members"
-            )
+        sups = _codebook(centroids.filter(F.col("cid") < n_super)).select(
+            F.col("_book").alias("_sups")
         )
-        routed = ev.crossJoin(F.broadcast(sups_packed)).select(
-            F.col(id_col), F.col(vec_col), F.col("_nv"), top.alias("_top")
+        members = (
+            _centroid_rows(centroids)
+            .crossJoin(F.broadcast(sups))
+            .select(
+                F.expr(f"array_min({_super_sims('cv', '_nc')}).sid").alias("sid"),
+                F.struct("cid", "cv", "_nc").alias("_c"),
+            )
+            .groupBy("sid")
+            .agg(F.array_sort(F.collect_list("_c")).alias("_members"))
+        )
+        routed = ev.crossJoin(F.broadcast(sups)).select(
+            F.col(id_col), "_v", "_nv", F.expr(_top_supers(nprobe)).alias("_top")
         )
         for j in range(nprobe):
             mj = members.select(
@@ -526,65 +558,31 @@ def ivf_assign_hier(
                 == F.col(f"_sid{j}"),
                 "left",
             )
-        cands = F.concat(
-            *[
-                F.transform(
-                    F.coalesce(F.col(f"_m{j}"), F.array().cast(_member_type)),
-                    lambda c: F.struct(
-                        (-_csim(c)).alias("negsim"), c["cid"].alias("cid")
-                    ),
-                )
-                for j in range(nprobe)
-            ]
+        cands = ", ".join(
+            _cell_sims(f"coalesce(_m{j}, CAST(array() AS {_MEMBER_TYPE}))")
+            for j in range(nprobe)
         )
-        best = F.array_min(cands)
-        return routed.select(F.col(id_col), best["cid"].alias("cid"))
+        return routed.select(
+            F.col(id_col), F.expr(f"array_min(concat({cands})).cid").alias("cid")
+        )
 
     # PACKED state (r9, the kmeans-lloyd3 pattern applied to the whole
-    # two-level assignment):
-    #   _sups : sorted array of (sid, sv, ns)            [n_super entries]
-    #   _cmap : map sid -> array of (cid, cv, nc)        [k entries total]
-    # Every vector row then routes AND argmins IN PLACE — the first cut
-    # shuffled n rows TWICE (a collect_list routing groupBy + a min_by
-    # level-2 groupBy); at 100 TB those were two full-corpus exchanges
-    # for an assignment whose state is k tiny arrays.  Comparators are
-    # unchanged: routing sorts (negsim, sid) structs ascending and
-    # slices nprobe (identical to the collect/sort/slice aggregate),
-    # level-2 takes array_min over (negsim, cid) structs (identical to
-    # min_by) — both replay the same doubles, so every downstream
-    # oracle is bit-unchanged.
-    packed = (
-        c2s.groupBy("sid")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("cid", "cv", "_nc"))
-            ).alias("_members")
-        )
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("sid", "_members"))
-            ).alias("_cmap")
-        )
-        .crossJoin(sups_packed)
-    )
-    cands = F.flatten(
-        F.transform(
-            top,
-            lambda t: F.transform(
-                F.coalesce(
-                    F.element_at(F.col("_cmap"), t["sid"]),
-                    F.array().cast(_member_type),
-                ),
-                lambda c: F.struct(
-                    (-_csim(c)).alias("negsim"), c["cid"].alias("cid")
-                ),
-            ),
-        )
-    )
-    best = F.array_min(cands)
-    return (
-        ev.crossJoin(F.broadcast(packed))
-        .select(F.col(id_col), best["cid"].alias("cid"))
+    # two-level assignment): the ``centroid_super_map`` row
+    #   _sups : sorted array of (cid, cv, _nc)           [n_super entries]
+    #   _cmap : map sid -> array of (cid, cv, _nc)       [k entries total]
+    # built by ONE aggregate over the centroid table.  Every vector row
+    # then routes AND argmins IN PLACE — the first cut shuffled n rows
+    # TWICE (a collect_list routing groupBy + a min_by level-2 groupBy);
+    # at 100 TB those were two full-corpus exchanges for an assignment
+    # whose state is k tiny arrays.  Comparators are unchanged: routing
+    # sorts (negsim, sid) structs ascending and slices nprobe
+    # (identical to the collect/sort/slice aggregate), level-2 takes
+    # array_min over (negsim, cid) structs (identical to min_by) — both
+    # replay the same doubles, so every downstream oracle is
+    # bit-unchanged.
+    best = f"array_min({_candidates(nprobe)}).cid"
+    return ev.crossJoin(F.broadcast(centroid_super_map(centroids, n_super))).select(
+        F.col(id_col), F.expr(best).alias("cid")
     )
 
 

@@ -20,11 +20,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vector import cosine_similarity, l2_distance
-
-
-def _query_vec_col(query_vec: Sequence[float]) -> Column:
-    return F.array(*[F.lit(float(x)) for x in query_vec]).cast("array<double>")
+from ..functions.vector import cosine, l2_distance, vec_literal
 
 
 def cosine_topk(
@@ -36,8 +32,10 @@ def cosine_topk(
     extra_cols: Sequence[str] = (),
     round_digits: int = 4,
 ) -> DataFrame:
-    q = _query_vec_col(query_vec)
-    sim = F.round(cosine_similarity(F.col(vec_col), q), round_digits).alias("sim")
+    v = f"CAST({vec_col} AS ARRAY<DOUBLE>)"
+    sim = F.expr(
+        f"round({cosine(v, vec_literal(query_vec))}, {round_digits})"
+    ).alias("sim")
     return (
         df.select(id_col, *extra_cols, sim)
         .orderBy(F.desc("sim"), F.col(id_col))
@@ -53,10 +51,9 @@ def l2_topk(
     vec_col: str = "embedding",
     round_digits: int = 4,
 ) -> DataFrame:
-    dist = F.round(l2_distance(vec_col, "_q"), round_digits).alias("dist")
+    dist = F.round(l2_distance(vec_col, vec_literal(query_vec)), round_digits)
     return (
-        df.withColumn("_q", _query_vec_col(query_vec))
-        .select(id_col, dist)
+        df.select(id_col, dist.alias("dist"))
         .orderBy(F.asc("dist"), F.col(id_col))
         .limit(k)
     )

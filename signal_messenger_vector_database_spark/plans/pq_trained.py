@@ -924,6 +924,7 @@ def _ivf_pq_operating_curve_sql() -> str:
         "i -> (qs.qv[i] - t.cw[i]) * (qs.qv[i] - t.cw[i])))"
     ).format(n=_OPD + 1)
     arm_rows = ", ".join(f"('{a}', {a})" for a in _CURVE_ARMS)
+    nq = len(_OP_QUESTIONS)
     return f"""
 WITH {HIER_ASSIGN_CTES},
 {_op_trained_cte_body()},
@@ -981,10 +982,10 @@ candn AS (SELECT arm, COUNT(*) AS sum_cand FROM cand GROUP BY arm)
 SELECT p2.arm, p2.np AS nprobe_eff,
        CAST(c2.sum_cand AS BIGINT) AS sum_cand,
        CAST(c2.sum_cand AS DOUBLE)
-         / (5.0 * (SELECT COUNT(*) FROM embeddings)) AS cand_frac,
+         / ({nq:.1f} * (SELECT COUNT(*) FROM embeddings)) AS cand_frac,
        CAST(SUM(p2.nh) AS BIGINT) AS n_hits,
-       CAST(SUM(p2.nh) AS DOUBLE) / 50.0 AS recall_mean,
-       MIN(CAST(p2.nh AS DOUBLE) / 10.0) AS recall_min
+       CAST(SUM(p2.nh) AS DOUBLE) / {nq * _OPTOPK:.1f} AS recall_mean,
+       MIN(CAST(p2.nh AS DOUBLE) / {_OPTOPK:.1f}) AS recall_min
 FROM perq p2 JOIN candn c2 USING (arm)
 GROUP BY p2.arm, p2.np, c2.sum_cand
 ORDER BY nprobe_eff, arm

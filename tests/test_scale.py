@@ -557,10 +557,13 @@ def test_aqe_splits_skewed_join_partitions(spark):
 
 
 def test_ivf_assign_hier_is_window_free_and_bounded_exchange(spark):
-    """Both levels of the hierarchical assignment must be aggregates
-    (partial-aggregable; the exchange carries n rows), never a window
-    over the n*n_super routing cross — and the top-nprobe routing is a
-    collect/sort/slice AGGREGATE, not a rank window."""
+    """Both levels of the hierarchical assignment are computed in place
+    on the vector rows (array_min / sort-and-slice over the broadcast
+    level-1 state), never a window over the n*n_super routing cross
+    and never an exchange of data rows: the plan's only aggregate is
+    the state's ONE collect_list over the centroid table (partial +
+    final), and its only shuffle is that aggregate's single-partition
+    exchange."""
     from signal_messenger_vector_database_spark.operators.ann import (
         ivf_assign_hier,
         ivf_seed_centroids,
@@ -570,9 +573,45 @@ def test_ivf_assign_hier_is_window_free_and_bounded_exchange(spark):
     plan = _plan(ivf_assign_hier(emb, ivf_seed_centroids(emb, 8), 2))
     assert "Window" not in plan, plan
     assert "CartesianProduct" not in plan or "BroadcastNestedLoopJoin" in plan
-    # three aggregation stages (centroid routing, vector routing, final
-    # argmin), each partial+final
-    assert plan.count("Aggregate") >= 4, plan
+    assert "hashpartitioning" not in plan, plan
+    assert plan.count("Aggregate") == 2, plan
+    assert plan.count("Exchange SinglePartition") == 1, plan
+
+
+def test_route_query_cells_is_one_projection_over_one_state_row(spark):
+    """The query-time router is a projection over ONE broadcast state
+    row: its executed plan has no Window and no hash-partitioned
+    Exchange (no per-centroid min_by shuffle, no per-query rank
+    window), and the level-1 state (``centroid_super_map``) is built by
+    exactly one aggregate exchange — single or batched queries alike."""
+    from pyspark.sql import functions as F
+
+    from signal_messenger_vector_database_spark.operators.ann import (
+        centroid_super_map,
+        ivf_seed_centroids,
+        route_query_cells,
+    )
+
+    emb = load_table(spark, SF, "embeddings")
+    cents = ivf_seed_centroids(emb, 8)
+    one = emb.filter(F.col("vec_id") == 3).select(F.col("embedding").alias("qv"))
+    batch = emb.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
+    )
+    for routed in (
+        route_query_cells(one, cents, 2, n_cells=2),
+        route_query_cells(batch, cents, 2, n_cells=2, id_col="qid", with_rank=True),
+    ):
+        assert routed.collect()
+        plan = _plan(routed)
+        assert "isFinalPlan=true" in plan, plan
+        assert "Window" not in plan, plan
+        assert "hashpartitioning" not in plan, plan
+    state = centroid_super_map(cents, 2)
+    assert state.count() == 1
+    splan = _plan(state)
+    assert splan.count("Exchange") == 1, splan
+    assert "Exchange SinglePartition" in splan, splan
 
 
 def test_sketch_histogram_partial_aggregates_map_side(spark):

@@ -23,11 +23,11 @@ sys.path.insert(0, REPO)
 
 def test_window_rotate_matches_pinned_window(monkeypatch):
     """The committed _WINDOW must be exactly what the tool generates
-    from the r01-r14 CORRECTNESS history (the documented input state in
+    from the r01-r16 CORRECTNESS history (the documented input state in
     the catalog comment block) and the documented --changed list — the
     rotation rule is executable, so the pinned list must not drift from
-    it.  History is pinned to <= r14 so the test stays true after the
-    r15 driver row lands.  This regeneration check is ALSO the
+    it.  History is pinned to <= r16 so the test stays true after the
+    r17 driver row lands.  This regeneration check is ALSO the
     displaced-entry enforcement (ADVICE r13): adding a round's queries
     without re-rotating fails it, and the rotation rule itself puts
     last round's displaced names at the head of the stale queue.
@@ -43,31 +43,34 @@ def test_window_rotate_matches_pinned_window(monkeypatch):
 
     real = window_rotate.latest_rounds
 
-    def r14_history():
+    def r16_history():
         import glob
         import re
 
         hist = {}
         for f in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
             rnd = int(re.search(r"r(\d+)", os.path.basename(f)).group(1))
-            if rnd > 14:
+            if rnd > 16:
                 continue
             for name in json.load(open(f)):
                 hist[name] = max(rnd, hist.get(name, 0))
         return hist
 
-    monkeypatch.setattr(window_rotate, "latest_rounds", r14_history)
-    assert real is not r14_history  # sanity: we really swapped it
+    monkeypatch.setattr(window_rotate, "latest_rounds", r16_history)
+    assert real is not r16_history  # sanity: we really swapped it
 
     changed = [
-        "topk_ivf_binary",
-        "stream_ivf_compact",
-        "curation_attrition",
-        "topk_ivf_cascade",
-        "topk_ivf_batch",
-        "quant_recall_matrix",
+        "dsir_weights",
+        "dup_substring_spans",
+        "boilerplate_strip",
+        "pq_operating_point",
+        "ivf_pq_operating_curve",
+        "ivf_pq_clustered_curve",
+        "ivf_recall_clustered",
+        "topk_ivf_pq_trained",
         "curation_pipeline",
-        "stream_ivf_maintain",
+        "curation_attrition",
+        "topk_ivf_pq",
     ]
     window, prov = window_rotate.compute_window(changed, 50)
     assert window == _WINDOW
@@ -76,16 +79,41 @@ def test_window_rotate_matches_pinned_window(monkeypatch):
     assert window[: len(changed)] == changed
 
 
-def test_window_rotate_ordering_and_validation():
+def test_window_rotate_ordering_and_validation(monkeypatch):
     import window_rotate
 
-    # stalest-first after the changed block: every non-changed entry's
-    # latest round must be <= the next one's only within the stale
-    # suffix when both have history (ties broken by catalog order)
+    from bench import RETIRED_HEADLINE
+    from signal_messenger_vector_database_spark.plans.catalog import (
+        all_specs,
+    )
+
+    # the documented key after the (empty) changed block: never-checked
+    # entries, then every overdue retiree as one block in
+    # RETIRED_HEADLINE order, then the stale suffix stalest-first with
+    # ties broken by catalog order
     window, prov = window_rotate.compute_window([], 50)
     hist = window_rotate.latest_rounds()
-    rounds = [hist[n] for n in window if n in hist]
-    assert rounds == sorted(rounds)
+    order = {n: i for i, n in enumerate(all_specs())}
+    overdue = prov["overdue"]
+    assert overdue == [n for n in RETIRED_HEADLINE if n in overdue]
+    assert all(n in window for n in overdue)
+    checked = [n for n in window if n in hist]
+    assert checked[: len(overdue)] == overdue
+    stale = checked[len(overdue) :]
+    assert stale == sorted(stale, key=lambda n: (hist[n], order[n]))
+
+    # an overdue retiree is never silently dropped: with a history that
+    # makes it overdue and a changed list that leaves no room, the tool
+    # exits non-zero
+    retiree = RETIRED_HEADLINE[0]
+    old = dict(hist, **{retiree: 1})
+    monkeypatch.setattr(window_rotate, "latest_rounds", lambda: old)
+    window, prov = window_rotate.compute_window([], 50)
+    assert retiree in prov["overdue"] and retiree in window
+    full = [n for n in order if n != retiree][:50]
+    with pytest.raises(SystemExit):
+        window_rotate.compute_window(full, 50)
+    monkeypatch.undo()
 
     with pytest.raises(SystemExit):
         window_rotate.compute_window(["no_such_query"], 50)

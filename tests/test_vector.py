@@ -23,6 +23,77 @@ def _vec_df(spark, vecs):
     )
 
 
+def test_dot_norm_cosine_renderers_match_column_api(spark):
+    """The SQL renderers ``dot``/``norm``/``cosine`` == the Column-API
+    ``dot_product``/``l2_norm``/``cosine_similarity`` bit-for-bit, on the
+    64-dim fixture embeddings against the reversed row divided by 3
+    (inexact, so a change of association shows up as a different
+    double); ``cosine`` with hoisted norm operands divides by the same
+    doubles."""
+    from signal_messenger_vector_database_spark.functions.vector import (
+        cosine,
+        dot,
+        norm,
+    )
+    from signal_messenger_vector_database_spark.io.sources import load_table
+
+    df = (
+        load_table(spark, SF, "embeddings")
+        .select(F.col("embedding").cast("array<double>").alias("a"))
+        .withColumn("b", F.expr("transform(reverse(a), x -> x / 3.0D)"))
+        .withColumn("na", F.expr(norm("a")))
+        .withColumn("nb", F.expr(norm("b")))
+    )
+    pairs = [
+        (dot_product("a", "b"), dot("a", "b")),
+        (l2_norm("b"), norm("b")),
+        (cosine_similarity("a", "b"), cosine("a", "b")),
+        (cosine_similarity("a", "b"), cosine("a", "b", "na", "nb")),
+    ]
+    cmp = df.select(
+        *[ref.alias(f"r{i}") for i, (ref, _) in enumerate(pairs)],
+        *[F.expr(got).alias(f"g{i}") for i, (_, got) in enumerate(pairs)],
+    )
+    assert cmp.count() > 0
+    for i in range(len(pairs)):
+        assert cmp.filter(~F.col(f"r{i}").eqNullSafe(F.col(f"g{i}"))).count() == 0, i
+
+
+def test_vec_literal_round_trips_every_double(spark):
+    """``vec_literal`` carries exactly the doubles ``F.lit`` does — sign
+    of zero, subnormals, the largest finite, NaN and the infinities
+    included — with ANSI mode on and off."""
+    import math
+    import struct
+
+    from signal_messenger_vector_database_spark.functions.vector import (
+        vec_literal,
+    )
+
+    vals = [
+        0.1, -0.0, 5e-324, 1e-300, 1.7976931348623157e308,
+        float("nan"), float("inf"), float("-inf"), -2.5, 1e16,
+    ]
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for ansi in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+            row = spark.range(1).select(
+                F.expr(vec_literal(vals)).alias("got"),
+                F.array(*[F.lit(v) for v in vals]).alias("ref"),
+            ).first()
+            for v, got, ref in zip(vals, row.got, row.ref):
+                bits = struct.pack("<d", got)
+                if math.isnan(v):
+                    assert math.isnan(got) and math.isnan(ref), ansi
+                else:
+                    assert bits == struct.pack("<d", ref) == struct.pack("<d", v), (
+                        ansi, v, got,
+                    )
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
 def test_vector_ops_match_numpy(spark):
     rng = np.random.RandomState(7)
     a, b = rng.randn(16).astype(np.float32), rng.randn(16).astype(np.float32)
@@ -315,8 +386,9 @@ def test_route_query_cells_replays_the_build_rule(spark):
     """r13 query-time multi-cell router: with n_cells=1, routing a
     corpus member's own vector must land EXACTLY on the cell
     ``ivf_assign_hier`` stored for it — the router and the build path
-    share one level-1 state (centroid_super_map) and one comparator,
-    so disagreement would mean the serving probe searches a different
+    read one level-1 state row (centroid_super_map, one aggregate) and
+    route with one ``top`` expression and one comparator, so
+    disagreement would mean the serving probe searches a different
     cell than the index filed the vector under.  With n_cells=2 the
     first cell is that same argmax and the second is distinct — the
     widened-probe contract topk_ivf_filtered serves with."""
@@ -424,11 +496,15 @@ def test_topk_ivf_filtered_respects_predicate_and_rank(spark):
 def test_route_query_cells_matches_independent_python_model(spark):
     """Circularity breaker for the r13 router (the numpy-Lloyd
     discipline): `route_query_cells` is pinned above against
-    `ivf_assign_hier`, but both share `centroid_super_map` — this test
-    replays the WHOLE two-level routing rule in pure Python (sequential
+    `ivf_assign_hier`, but both read the one `centroid_super_map` state
+    row and share its in-place level-1 comparator — this test replays
+    the WHOLE two-level routing rule in pure Python (sequential
     left-fold dot products, exactly the functions/vector.py summation
     order, so every double is bit-identical) and requires the router's
-    ranked multi-cell output to match it for a batch of queries."""
+    ranked multi-cell output to match it for a batch of queries — at
+    the default probe, with nprobe > n_super (every super probed), and
+    with an n_cells larger than the eligible cells (all of them come
+    back, ranked)."""
     import math
 
     from pyspark.sql import functions as F
@@ -448,7 +524,6 @@ def test_route_query_cells_matches_independent_python_model(spark):
     n = parquet_row_count(sf, "embeddings")
     k = scaled_cluster_count(n)
     ns = hier_super_count(k)
-    nprobe, n_cells = 3, 4
     emb = load_table(spark, sf, "embeddings")
     vecs = {
         r.vec_id: [float(x) for x in r.embedding]
@@ -472,7 +547,7 @@ def test_route_query_cells_matches_independent_python_model(spark):
         for c in cents
     }
 
-    def model_route(qv):
+    def model_route(qv, nprobe, n_cells):
         sids = sorted(supers, key=lambda s: (-cos(qv, supers[s]), s))[:nprobe]
         cells = [c for c in cents if c2s[c] in sids]
         return sorted(cells, key=lambda c: (-cos(qv, cents[c]), c))[:n_cells]
@@ -481,15 +556,25 @@ def test_route_query_cells_matches_independent_python_model(spark):
     qt = emb.filter(F.col("vec_id").isin(qids)).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )
-    got = {}
-    for r in route_query_cells(
-        qt, ivf_seed_centroids(emb, k), ns, nprobe=nprobe,
-        n_cells=n_cells, id_col="qid", with_rank=True,
-    ).collect():
-        got.setdefault(r.qid, []).append((r.cell_rank, r.cid))
     qvecs = {
         r.qid: [float(x) for x in r.qv] for r in qt.collect()
     }
-    for qid in qids:
-        want = model_route(qvecs[qid])
-        assert [c for _, c in sorted(got[qid])] == want, (qid, got[qid], want)
+    # (default probe, nprobe > n_super, n_cells > the eligible cells)
+    for nprobe, n_cells in ((3, 4), (ns + 2, 4), (1, k + 3)):
+        got = {}
+        for r in route_query_cells(
+            qt, ivf_seed_centroids(emb, k), ns, nprobe=nprobe,
+            n_cells=n_cells, id_col="qid", with_rank=True,
+        ).collect():
+            got.setdefault(r.qid, []).append((r.cell_rank, r.cid))
+        for qid in qids:
+            want = model_route(qvecs[qid], nprobe, n_cells)
+            assert [c for _, c in sorted(got[qid])] == want, (
+                nprobe, n_cells, qid, got[qid], want,
+            )
+            assert [rk for rk, _ in sorted(got[qid])] == list(
+                range(1, len(want) + 1)
+            )
+        if n_cells > k:
+            # one super's members are fewer than k: the slice is short
+            assert all(len(v) < k for v in got.values())

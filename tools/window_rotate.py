@@ -8,7 +8,11 @@ round's window is generated from recorded state instead of hand-sorted:
   1. ``--changed`` names first (plans or oracles that changed this
      round, plus brand-new entries), in the order given;
   2. oracle-paired entries with NO driver CORRECTNESS row yet;
-  3. every other oracle-paired entry, stalest latest-driver-round
+  3. OVERDUE retirees as one block, in ``bench.RETIRED_HEADLINE`` order:
+     bench-retired queries whose latest driver row is two or more
+     rounds old.  Every one of them must get a slot — when they do not
+     all fit, the tool exits non-zero instead of dropping one;
+  4. every other oracle-paired entry, stalest latest-driver-round
      first (ties broken by catalog order).
 
 Rows-only entries (oracle is None) are excluded: they can never turn
@@ -97,7 +101,13 @@ def compute_window(
         and n not in window
         and hist.get(n, -(10**6)) <= cur - 2
     ]
-    window += overdue[: size - len(window)]
+    if len(overdue) > size - len(window):
+        raise SystemExit(
+            f"overdue retirees {overdue[size - len(window):]} do not fit the "
+            f"{size}-slot window after {len(window)} changed/never-checked "
+            "names: shorten --changed"
+        )
+    window += overdue
     stale = sorted(
         (n for n in paired if n in hist and n not in window),
         key=lambda n: (hist[n], order[n]),
@@ -110,6 +120,7 @@ def compute_window(
         "n_paired": len(paired),
         "n_changed": len(changed),
         "n_never_checked": len(never),
+        "overdue": overdue,
         "staleness_histogram": dict(
             sorted(
                 __import__("collections")
